@@ -201,15 +201,13 @@ def _pick_runs(walls: list[float], stalls: list[float]) -> dict:
     }
 
 
-def _timed_pipeline_run(spark, path: str, parse_impl: str, salt_buckets: int = 0) -> tuple[float, int]:
+def _timed_pipeline_run(spark, path: str) -> tuple[float, int]:
     from otel_kafka_pg_spark.plans.pipeline import run_pipeline
 
     out = tempfile.mkdtemp(prefix="bench_pipeline_")
     try:
         t0 = time.monotonic()
-        manifest = run_pipeline(
-            spark, path, out, parse_impl=parse_impl, salt_buckets=salt_buckets, resume=False
-        )
+        manifest = run_pipeline(spark, path, out, resume=False)
         return time.monotonic() - t0, next(iter(manifest["sinks"].values()))["input_rows"]
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -218,62 +216,43 @@ def _timed_pipeline_run(spark, path: str, parse_impl: str, salt_buckets: int = 0
 def run_pipeline_bench(
     spark,
     sf_dir: str,
-    parse_impl: str = "native",
     n_turns: int | None = None,
-    impls: tuple = None,
-    salt_buckets: int = 0,
     probe: StallProbe | None = None,
     n_runs: int = 5,
 ) -> dict:
     """Full parse→enrich→route→sink run over synthetic transcripts sized to
-    the sf dir; returns wall time + turns/sec per parse impl.
+    the sf dir; returns wall time + turns/sec.
 
     Timing discipline for this noisy sandbox (sporadic host CPU steal,
     vmstat st spikes >15%, windows lasting minutes):
-    - JIT warm-up at 1% scale per impl first (steady-state codegen cost,
-      what a 10^12-row run sees — not one-off JVM compilation);
-    - impls run INTERLEAVED (native, pandas, native, pandas) so a steal
-      window penalizes both equally;
-    - best-of-5 per impl (min is the standard noise-robust estimator),
-      median reported alongside; every raw wall time is in runs_sec;
+    - JIT warm-up at 1% scale first (steady-state codegen cost, what a
+      10^12-row run sees — not one-off JVM compilation);
+    - best-of-n_runs (min is the standard noise-robust estimator), median
+      reported alongside; every raw wall time is in runs_sec;
     - every run carries a StallProbe label: the run-of-record's
       stall_factor says whether ITS window was clean."""
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline
     from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
 
     probe = probe or StallProbe()
-    impls = impls or (parse_impl,)
     n_turns = _resolve_turns(sf_dir, n_turns)
     path = load_or_synth_transcripts(n_turns, seed=42)
-    warm_path = load_or_synth_transcripts(max(n_turns // 100, 2000), seed=43)
-    for impl in impls:
-        warm_out = tempfile.mkdtemp(prefix="bench_warm_")
-        try:
-            run_pipeline(spark, warm_path, warm_out, parse_impl=impl, resume=False)
-        finally:
-            shutil.rmtree(warm_out, ignore_errors=True)
-    walls = {impl: [] for impl in impls}
-    stalls = {impl: [] for impl in impls}
+    _timed_pipeline_run(spark, load_or_synth_transcripts(max(n_turns // 100, 2000), seed=43))  # warm-up
+    walls, stalls = [], []
     rows = 0
     before = probe.sample()
-    for _ in range(n_runs):  # interleaved best-of-n
-        for impl in impls:
-            w, rows = _timed_pipeline_run(spark, path, impl, salt_buckets)
-            after = probe.sample()
-            walls[impl].append(w)
-            stalls[impl].append(max(before, after))
-            before = after  # the after-probe doubles as the next run's before
-    results = {}
-    for impl in impls:
-        picked = _pick_runs(walls[impl], stalls[impl])
-        results[impl] = {
-            "turns": rows,
-            **picked,
-            "turns_per_sec": round(rows / picked["wall_sec"], 1),
-            "turns_per_sec_median": round(rows / picked["wall_sec_median"], 1),
-            "parse_impl": impl,
-        }
-    return results if len(impls) > 1 else results[impls[0]]
+    for _ in range(n_runs):
+        w, rows = _timed_pipeline_run(spark, path)
+        after = probe.sample()
+        walls.append(w)
+        stalls.append(max(before, after))
+        before = after  # the after-probe doubles as the next run's before
+    picked = _pick_runs(walls, stalls)
+    return {
+        "turns": rows,
+        **picked,
+        "turns_per_sec": round(rows / picked["wall_sec"], 1),
+        "turns_per_sec_median": round(rows / picked["wall_sec_median"], 1),
+    }
 
 
 def run_queries_bench(
@@ -307,8 +286,7 @@ def run_queries_bench(
 
 
 def main_bench(
-    cpus: int, sf_dir: str, pipeline_only: bool, turns: int | None = None, salt_buckets: int = 0,
-    n_runs: int = 5,
+    cpus: int, sf_dir: str, pipeline_only: bool, turns: int | None = None, n_runs: int = 5
 ) -> dict:
     from otel_kafka_pg_spark.session import get_spark
 
@@ -316,27 +294,10 @@ def main_bench(
     # warm the JVM/codegen path so timings measure the engine, not startup
     spark.range(1000).selectExpr("sum(id)").collect()
     probe = StallProbe()
-    if pipeline_only:
-        pipeline = run_pipeline_bench(
-            spark, sf_dir, n_turns=turns, salt_buckets=salt_buckets, probe=probe, n_runs=n_runs
-        )
-        queries = {"pipeline": pipeline["wall_sec"]}
-        detail = {"pipeline": {k: pipeline[k] for k in ("wall_sec_median", "stall_factor", "stall_max")}}
-        extra = {"pipeline": pipeline}
-    else:
-        # both parse impls, interleaved (same output, asserted byte-identical
-        # in tests): native codegen regexp (the default) vs the Arrow
-        # grok-UDF twin. "pipeline" = the DEFAULT configuration's number.
-        both = run_pipeline_bench(
-            spark, sf_dir, n_turns=turns, impls=("native", "pandas"),
-            salt_buckets=salt_buckets, probe=probe, n_runs=n_runs,
-        )
-        queries, detail = run_queries_bench(spark, sf_dir, HEADLINE, probe=probe)
-        queries["pipeline"] = both["native"]["wall_sec"]
-        queries["pipeline_pandas"] = both["pandas"]["wall_sec"]
-        for label, impl in (("pipeline", "native"), ("pipeline_pandas", "pandas")):
-            detail[label] = {k: both[impl][k] for k in ("wall_sec_median", "stall_factor", "stall_max")}
-        extra = {"pipeline": both["native"], "pipeline_pandas": both["pandas"]}
+    pipeline = run_pipeline_bench(spark, sf_dir, n_turns=turns, probe=probe, n_runs=n_runs)
+    queries, detail = ({}, {}) if pipeline_only else run_queries_bench(spark, sf_dir, HEADLINE, probe=probe)
+    queries["pipeline"] = pipeline["wall_sec"]
+    detail["pipeline"] = {k: pipeline[k] for k in ("wall_sec_median", "stall_factor", "stall_max")}
     result = {
         "metric": "total_bench_sec",
         "value": round(sum(queries.values()), 3),
@@ -348,7 +309,7 @@ def main_bench(
         # cleanliness + the absolute probe baseline for cross-round checks
         "stall": detail,
         "probe_baseline_sec": round(probe.baseline, 4),
-        **extra,
+        "pipeline": pipeline,
     }
     return result
 
@@ -474,10 +435,8 @@ if __name__ == "__main__":
     ap.add_argument("--scaling-low", type=int, default=1)
     ap.add_argument("--scaling-high", type=int, default=4)
     ap.add_argument("--turns", type=int, default=None)
-    ap.add_argument("--runs", type=int, default=5, help="pipeline repetitions (interleaved best-of-n)")
+    ap.add_argument("--runs", type=int, default=5, help="pipeline repetitions (best-of-n)")
     ap.add_argument("--scaling-turns", type=int, default=2_400_000)
-    ap.add_argument("--salt-buckets", type=int, default=0,
-                    help="pre-parse salted repartition buckets (0 = off, the default plan)")
     ap.add_argument("--detail-file", default=None,
                     help="where the FULL per-query result JSON is written in headline mode "
                          "(default BENCH/last_full_bench.json next to this script)")
@@ -489,10 +448,10 @@ if __name__ == "__main__":
         print(json.dumps(result))
     elif args.pipeline_only:
         # small payload (and main_scaling parses it from stdout) — unchanged
-        result = main_bench(args.cpus, args.sf_dir, True, args.turns, args.salt_buckets, args.runs)
+        result = main_bench(args.cpus, args.sf_dir, True, args.turns, args.runs)
         print(json.dumps(result))
     else:
-        result = main_bench(args.cpus, args.sf_dir, False, args.turns, args.salt_buckets, args.runs)
+        result = main_bench(args.cpus, args.sf_dir, False, args.turns, args.runs)
         detail_file = args.detail_file or os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH", "last_full_bench.json"
         )

@@ -7,7 +7,7 @@ Cluster usage (the north-rule shipping shape)::
     spark-submit --py-files engine.zip jobs/pipeline.py \
         --input  <iceberg-or-parquet path of transcripts> \
         --output <sink root> \
-        [--parse-impl native|pandas] [--salt-buckets 64] [--no-resume]
+        [--no-resume]
 
 Local smoke (synthesizes input if --input omitted)::
 
@@ -34,19 +34,8 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", default=None, help="transcripts parquet path (default: synthesize 60k turns)")
     ap.add_argument("--output", required=True, help="sink root directory")
-    ap.add_argument("--parse-impl", choices=["native", "pandas"], default="native")
-    ap.add_argument("--salt-buckets", type=int, default=0,
-                    help="0 = no pre-parse shuffle (default; scan splits are balanced); "
-                         ">0 only for skew-laid-out sources")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--layout", choices=["multiwrite", "onepass"], default="multiwrite",
-                    help="multiwrite = one parquet dir per sink (default); onepass = single "
-                         "partitionBy(signal_type) write, sinks as partition-pruned views — "
-                         "the no-persist 100 TB fan-out (see SCALE.md)")
     args = ap.parse_args()
-    if args.layout == "onepass" and args.salt_buckets:
-        # validate BEFORE building a Spark session / synthesizing input
-        ap.error("--salt-buckets applies only to --layout multiwrite")
 
     from pyspark import SparkConf
     from pyspark.sql import SparkSession
@@ -71,22 +60,9 @@ def main() -> int:
 
         input_path = load_or_synth_transcripts(60_000, seed=42)
 
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline, run_pipeline_onepass
+    from otel_kafka_pg_spark.plans.pipeline import run_pipeline
 
-    if args.layout == "onepass":
-        manifest = run_pipeline_onepass(
-            spark, input_path, args.output, parse_impl=args.parse_impl,
-            resume=not args.no_resume,
-        )
-    else:
-        manifest = run_pipeline(
-            spark,
-            input_path,
-            args.output,
-            parse_impl=args.parse_impl,
-            salt_buckets=args.salt_buckets,
-            resume=not args.no_resume,
-        )
+    manifest = run_pipeline(spark, input_path, args.output, resume=not args.no_resume)
     summary = {
         "input": input_path,
         "output": args.output,

@@ -11,7 +11,7 @@ transcript tables, designed for 100 TB / multi-executor scale:
 - ``sources``   — deterministic transcript/lookup synthesis + testdata loaders
 - ``functions`` — parse UDFs (native regexp + vectorized pandas), attr-JSON
   canonicalization, text statistics, vector math
-- ``operators`` — enrich (broadcast join), ordering/salting, routing,
+- ``operators`` — enrich (broadcast join), stable ordering, routing,
   aggregate/query library, dedup, similarity search
 - ``plans``     — the end-to-end pipeline with checkpoint manifest + resume
 - ``streaming`` — Structured Streaming variant of the ingest path

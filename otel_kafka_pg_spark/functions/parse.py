@@ -10,7 +10,8 @@ Two interchangeable implementations produce byte-identical output (asserted
 in tests):
 
 - ``parse_turns_native`` — pure ``pyspark.sql.functions`` regexp expressions
-  inside whole-stage codegen; zero Python. THE DEFAULT. Round-1 evidence
+  inside whole-stage codegen; zero Python. The one the batch pipeline, the
+  streaming pipeline and the stateful stream all run. Round-1 evidence
   flipped this choice: on an idle host the pandas UDF measured 2-4× faster
   (pandas' C string loops beat java.util.regex), but under host CPU
   contention the driver's run of record (BENCH_r01.json) had the pandas
@@ -19,9 +20,9 @@ in tests):
   default must be robust, not best-case-fastest.
 - ``parse_turns_pandas`` — one Arrow-batched ``pandas_udf`` using vectorized
   ``Series.str.extract`` (no per-row Python) — the grok-UDF surface the
-  design calls for, byte-identical (asserted), still the right choice on
-  clusters with reserved cores; the streaming pipeline runs it by default
-  so both impls stay driver-exercised.
+  design calls for, byte-identical (asserted). No pipeline runs it; it is
+  the differential reference of tests/test_parse.py and
+  tests/test_properties.py.
 
 Field semantics mirrored from the reference:
 

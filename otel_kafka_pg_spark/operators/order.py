@@ -1,31 +1,24 @@
-"""Stable turn ordering + skew-defeating salted repartition.
+"""Stable turn ordering.
 
 The reference processes Kafka messages in partition order and relies on
 upsert-by-key to resolve replays (reference: consumer.go:162-225,
 trace/repository/repository.go:80-87). Our batch analog must make per-turn
 output a pure function of the input regardless of task scheduling:
+``with_stable_order`` numbers every turn with ``row_number`` over
+(conv_id, turn_idx), a dense per-conversation sequence, so per-turn text
+equality holds row-for-row.
 
-- ``with_stable_order``: ``row_number`` over (conv_id, turn_idx) gives every
-  turn a dense per-conversation sequence so per-turn text equality holds
-  row-for-row.
-- ``salted_repartition``: long conversations are Zipf-skewed; hashing only
-  conv_id would send a 4000-turn conversation to one task. Salting with
-  ``pmod(hash(turn_idx), buckets)`` spreads each conversation across
-  ``buckets`` tasks for the embarrassingly-parallel parse/enrich stages.
-  Aggregates later re-group on true conv_id (the salt never leaks into
-  results). At 1000-executor scale the same expression balances the scan →
-  parse stage; AQE skew-join handles any residual join skew.
+This window is the pipeline's one data shuffle (hash-partitioned by
+conv_id). Conversation lengths are Zipf-skewed, so the longest
+conversation's turns are sorted in one task; the conversation-length cap
+bounds that task, and a cap violation degrades to a slow task, not wrong
+rows (tests/test_pipeline_parity.py pins the 25k-turn case).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:
-    salt = F.pmod(F.hash("turn_idx"), F.lit(salt_buckets))
-    return df.repartition(num_partitions, F.col("conv_id"), salt)
 
 
 def with_stable_order(df: DataFrame) -> DataFrame:

@@ -5,7 +5,7 @@ This is the batch re-expression of the reference's ingest path
 consumer.go:162-329). One lazily-built DAG:
 
     read parquet                                              [size-balanced splits]
-      → vectorized parse of text                              [decoder batch, narrow]
+      → codegen regexp parse of text                          [decoder batch, narrow]
       → window(conv_id, turn_idx) stable ordering             [row-for-row parity]
       → broadcast-join enrich on (tool, role)                 [resource attrs]
       → classify signal_type                                  [topic dispatch]
@@ -15,14 +15,16 @@ consumer.go:162-329). One lazily-built DAG:
 
 Scale notes (the plan that must survive 1000 executors / 100 TB):
 - the only wide operations are the ordering window (shuffle by conv_id)
-  and the counts aggregation (map-side partial); parse/enrich/route/write
-  are pipelined narrow stages under whole-stage codegen (native parse) or
-  Arrow batches (pandas parse). An optional pre-parse salted repartition
-  (salt_buckets>0) exists for skew-LAID-OUT sources — see build_routed.
+  and the counts aggregation (map-side partial); scan/parse/enrich/route/
+  write are pipelined narrow stages under whole-stage codegen. Parquet
+  scan splits are size-balanced, so no pre-parse repartition is needed;
+  the window's skew is bounded by the conversation-length cap.
 - the enrich join is a broadcast hash join by construction — no shuffle of
   the fact side, no skew exposure.
-- fan-out materializes the routed frame once (persist) and scans it three
-  times; at cluster scale the persist level spills to disk gracefully.
+- fan-out persists the routed frame once and scans it three times; at
+  cluster scale ``DataFrame.persist()`` (``MEMORY_AND_DISK_DESER``) spills
+  the blocks that do not fit executor memory to local disk rather than
+  failing.
 - writes are per-sink parquet (Iceberg-ready: swap the writer for
   ``writeTo(...).append()`` — the manifest/resume logic is sink-agnostic).
 """
@@ -35,7 +37,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.enrich import enrich_with_lookup
-from ..operators.order import salted_repartition, with_stable_order
+from ..operators.order import with_stable_order
 from ..operators.route import SINK_BUILDERS, classify_signal, sink_counts, with_attributes
 from ..sources.synth import service_lookup_pandas
 from .manifest import (
@@ -76,34 +78,14 @@ def build_routed(
     spark: SparkSession,
     transcripts: DataFrame,
     lookup: DataFrame | None = None,
-    parse_impl: str = "native",
-    salt_buckets: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Compose the full transform DAG up to (but excluding) the sinks.
-
-    ``salt_buckets=0`` (default) skips the pre-parse salted repartition:
-    parquet scan splits are already size-balanced (maxPartitionBytes), the
-    parse/enrich stages are embarrassingly parallel over whatever splits
-    the scan produced, and the ordering window immediately re-shuffles by
-    bare conv_id anyway — so the salted exchange was a full-input shuffle
-    whose skew benefit applied to a stage that was already balanced
-    (round-2 measurement in BENCH/BASELINE.md: dropping it removed one of
-    two exchanges and cut pipeline wall time; the window itself remains
-    the true skew point, bounded by the 4 000-turn conversation cap).
-    Pass ``salt_buckets>0`` to re-enable for sources whose LAYOUT is
-    skewed (e.g. one giant input file per hot conversation, kafka
-    partitions keyed by conv_id) — there the scan splits themselves are
-    unbalanced and the salted exchange buys parse-stage balance."""
+    """Compose the full transform DAG up to (but excluding) the sinks:
+    native parse → ordering window → broadcast enrich → route."""
     from ..functions.parse import parse_turns
 
     if lookup is None:
         lookup = spark.createDataFrame(service_lookup_pandas())
-    df = transcripts
-    if salt_buckets:
-        n = num_partitions or spark.sparkContext.defaultParallelism
-        df = salted_repartition(df, n, salt_buckets)
-    df = parse_turns(df, impl=parse_impl)
+    df = parse_turns(transcripts)
     df = with_stable_order(df)
     df = enrich_with_lookup(df, lookup)
     return with_attributes(classify_signal(df))
@@ -114,32 +96,23 @@ def run_pipeline(
     input_path: str,
     out_dir: str,
     lookup: DataFrame | None = None,
-    parse_impl: str = "native",
-    salt_buckets: int = 0,
     resume: bool = True,
     fail_after_sink: str | None = None,
-    persist_routed: bool = True,
 ) -> dict:
     """Run the pipeline end-to-end with manifest checkpointing.
 
     Returns the manifest. With ``resume=True``, sinks already completed for
     the same input fingerprint are skipped (idempotent resume of partially
-    completed routes).
-
-    ``persist_routed``: cache the routed frame between the three sink scans
-    (right at sandbox scale, where the whole frame fits in memory). At
-    100 TB the cache would exceed executor storage — pass False and each
-    sink recomputes its narrow projection instead (see SCALE.md); results
-    are identical either way (asserted in tests).
+    completed routes). The routed frame is persisted whenever more than
+    one sink is pending (see the module scale notes).
     """
     fp = input_fingerprint(input_path)
     fp += "|lookup:" + _lookup_fingerprint(lookup if lookup is not None else service_lookup_pandas())
     manifest = load_manifest(out_dir) if resume else {"input_fingerprint": None, "sinks": {}}
-    # a onepass-layout manifest over the same out_dir marks the SAME sinks
-    # "complete" but never wrote the per-sink directories this layout
-    # produces — treat it like a fingerprint mismatch (the mirror of the
-    # layout check run_pipeline_onepass performs), otherwise a multiwrite
-    # resume over a onepass result returns success without writing anything
+    # earlier versions could write a "onepass" layout (one partitioned
+    # routed dataset, no per-sink directories) whose manifest marks the SAME
+    # sinks complete — treat it like a fingerprint mismatch, otherwise a
+    # resume over such an out_dir returns success without writing anything
     if manifest.get("input_fingerprint") != fp or manifest.get("layout") == "onepass":
         manifest = {"input_fingerprint": fp, "sinks": {}}
 
@@ -152,11 +125,11 @@ def run_pipeline(
         return manifest
 
     transcripts = spark.read.parquet(input_path)
-    routed = build_routed(spark, transcripts, lookup, parse_impl, salt_buckets)
+    routed = build_routed(spark, transcripts, lookup)
     # a cache only pays for itself when more than one sink will scan it —
     # a single-sink resume scans the frame exactly once
-    persist_routed = persist_routed and len(pending) > 1
-    if persist_routed:
+    persisted = len(pending) > 1
+    if persisted:
         routed = routed.persist()
     try:
         t0 = time.monotonic()
@@ -203,96 +176,6 @@ def run_pipeline(
             manifest.pop("turns_per_sec", None)
         save_manifest(out_dir, manifest)
     finally:
-        if persist_routed:
+        if persisted:
             routed.unpersist()
-    return manifest
-
-
-def run_pipeline_onepass(
-    spark: SparkSession,
-    input_path: str,
-    out_dir: str,
-    lookup: DataFrame | None = None,
-    parse_impl: str = "native",
-    resume: bool = True,
-) -> dict:
-    """The 100 TB routing alternative documented in SCALE.md, implemented:
-    ONE write of the routed superset frame, hive-partitioned by
-    ``signal_type``, instead of three filtered sink writes over a persisted
-    (or thrice-recomputed) frame.
-
-    - input is scanned and transformed exactly once; total write volume is
-      identical to the three-sink form (the sinks partition the data), but
-      no persist memory is needed and no recompute happens;
-    - each sink is then a VIEW over its partition directory: the same
-      SINK_BUILDERS run against the read-back table, where Catalyst prunes
-      the ``signal_type=<x>`` partition (metadata-only — asserted in
-      tests) and column pruning keeps the per-sink projection narrow;
-    - per-sink rows/content-hash for the manifest come from those pruned
-      scans of the WRITTEN data — the summary describes what is durably on
-      disk, the property resume relies on.
-
-    Row-set parity with ``run_pipeline`` is asserted in
-    tests/test_pipeline_parity.py.
-
-    Resume granularity is coarser than the multiwrite path by design: the
-    routed dataset is ONE write, so there is no per-sink partial resume —
-    a completed manifest for the same input fingerprint skips the whole
-    run; anything less than complete rewrites everything.
-    """
-    from ..operators.route import SINK_SIGNAL
-    from .manifest import content_hash
-
-    fp = input_fingerprint(input_path)
-    fp += "|lookup:" + _lookup_fingerprint(lookup if lookup is not None else service_lookup_pandas())
-    if resume:  # resume=False forces a full rewrite even over a complete manifest
-        existing = load_manifest(out_dir)
-        if existing.get("input_fingerprint") == fp and existing.get("layout") == "onepass" and all(
-            existing["sinks"].get(s, {}).get("status") == "complete"
-            for s in (*SINK_BUILDERS, "sink_counts")
-        ):
-            return existing
-
-    routed_dest = os.path.join(out_dir, "routed")
-    t0 = time.monotonic()
-    routed = build_routed(spark, spark.read.parquet(input_path), lookup, parse_impl)
-    # write only the union of sink-consumed columns: no sink reads the raw
-    # text (message was derived at parse), the resource_attrs map (the
-    # rendered attributes JSON is precomputed by with_attributes), or
-    # turn_seq — dropping them keeps the one write's volume at the
-    # three-sink form's level instead of duplicating the heaviest column
-    routed = routed.drop("text", "resource_attrs", "turn_seq")
-    routed.write.mode("overwrite").partitionBy("signal_type").parquet(routed_dest)
-
-    back = spark.read.parquet(routed_dest)
-    manifest = {"input_fingerprint": fp, "sinks": {}, "layout": "onepass"}
-    for sink_name, builder in SINK_BUILDERS.items():
-        rows, chash = content_hash(builder(back))
-        manifest["sinks"][sink_name] = {
-            "status": "complete",
-            "rows": rows,
-            "content_hash": chash,
-            "path": routed_dest,
-            "partition": f"signal_type={SINK_SIGNAL[sink_name]}",
-        }
-    counts_dest = os.path.join(out_dir, "sink_counts")
-    rows, chash, lineage = write_with_summary(sink_counts(back), counts_dest)
-    manifest["sinks"]["sink_counts"] = {
-        "status": "complete",
-        "rows": rows,
-        "content_hash": chash,
-        "path": counts_dest,
-        "lineage": lineage,
-    }
-    # manifest symmetry with run_pipeline: routing is exclusive+exhaustive,
-    # so input rows = sum of the three sink partitions, and this layout has
-    # no partial resume — every complete manifest describes one full run
-    input_rows = sum(manifest["sinks"][s]["rows"] for s in SINK_BUILDERS)
-    for s in manifest["sinks"].values():
-        s["input_rows"] = input_rows
-    manifest["elapsed_sec"] = time.monotonic() - t0
-    manifest["turns_per_sec"] = (
-        input_rows / manifest["elapsed_sec"] if manifest["elapsed_sec"] else None
-    )
-    save_manifest(out_dir, manifest)
     return manifest

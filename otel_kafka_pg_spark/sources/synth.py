@@ -15,7 +15,7 @@ decodes wire bytes; here the "wire format" is the marker grammar below):
 Everything is seeded and derived from row indices — no wall clock, no
 unseeded randomness (the reference's own non-deterministic ID bug at
 processor.go:362 is the cautionary citation). Conversation lengths are
-Zipf-skewed so a few very long conversations exercise the salting path.
+Zipf-skewed so a few very long conversations skew the ordering window.
 
 Generation is fully vectorized (numpy + pandas string ops); parquet is
 written via pyarrow and cached under ``.data/`` keyed by (n_turns, seed).

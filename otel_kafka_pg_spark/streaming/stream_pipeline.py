@@ -84,7 +84,6 @@ def run_stream(
     out_dir: str,
     lookup: DataFrame | None = None,
     max_files_per_trigger: int = 4,
-    parse_impl: str = "pandas",
     source_format: str = "files",
     kafka_options: dict | None = None,
 ) -> None:
@@ -178,7 +177,7 @@ def run_stream(
             ).collect()[0]
             sig_src = f"batch:{batch_id}:{m['n']}:{m['h']}"
         input_sig = hashlib.sha256(sig_src.encode()).hexdigest()
-        routed = build_routed(spark, batch_df, lookup, parse_impl).persist()
+        routed = build_routed(spark, batch_df, lookup).persist()
         try:
             builders = {**SINK_BUILDERS, "sink_counts": sink_counts}
             for name, builder in builders.items():
@@ -224,7 +223,6 @@ def streaming_severity_counts(
     input_dir: str,
     watermark: str = "2 hours",
     window: str = "1 hour",
-    parse_impl: str = "pandas",
 ) -> DataFrame:
     """Watermarked event-time windowed severity counts over the turn stream.
 
@@ -236,7 +234,7 @@ def streaming_severity_counts(
     from ..functions.parse import parse_turns
 
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_dir)
-    parsed = parse_turns(stream, impl=parse_impl)
+    parsed = parse_turns(stream)
     return (
         parsed.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("bucket"), "severity")
@@ -292,7 +290,6 @@ def stream_trace_log_join(
     input_dir: str,
     watermark: str = "2 hours",
     max_lag_seconds: int = 10,
-    parse_impl: str = "native",
 ) -> DataFrame:
     """Stream-STREAM event-time interval join: correlate every trace turn
     with the log turns of the same conversation that arrive within
@@ -317,7 +314,7 @@ def stream_trace_log_join(
     from ..operators.route import classify_signal
 
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_dir)
-    routed = classify_signal(parse_turns(stream, impl=parse_impl))
+    routed = classify_signal(parse_turns(stream))
     traces = (
         routed.filter(F.col("signal_type") == "trace")
         .select(

@@ -67,7 +67,7 @@ def test_lineage_covers_all_rows(pipe_out):
 def test_determinism_rerun_same_hashes(spark, transcripts_path, pipe_out, tmp_path):
     _, manifest1 = pipe_out
     out2 = str(tmp_path / "rerun")
-    manifest2 = run_pipeline(spark, transcripts_path, out2, parse_impl="native")
+    manifest2 = run_pipeline(spark, transcripts_path, out2)
     for sink in ("traces", "logs", "metrics", "sink_counts"):
         assert manifest1["sinks"][sink]["content_hash"] == manifest2["sinks"][sink]["content_hash"], sink
         assert manifest1["sinks"][sink]["rows"] == manifest2["sinks"][sink]["rows"], sink
@@ -98,60 +98,64 @@ def test_resume_skips_completed_sinks(spark, transcripts_path, pipe_out):
     }
 
 
-def test_no_persist_mode_identical_hashes(spark, transcripts_path, pipe_out, tmp_path):
-    # the 100 TB configuration (SCALE.md): no fan-out cache, sinks recompute
-    _, manifest1 = pipe_out
-    out = str(tmp_path / "nopersist")
-    manifest2 = run_pipeline(spark, transcripts_path, out, persist_routed=False)
+def test_single_pending_sink_resume_skips_persist(spark, transcripts_path, pipe_out, tmp_path, monkeypatch):
+    """A resume with one sink pending scans the routed frame once, so it
+    must not persist it; its output must still equal an uninterrupted run's,
+    and its manifest must record a partial resume, not a throughput."""
+    from otel_kafka_pg_spark.plans.manifest import load_manifest
+
+    _, manifest_full = pipe_out
+    out = str(tmp_path / "one_pending")
+    with pytest.raises(SinkFailure):
+        run_pipeline(spark, transcripts_path, out, fail_after_sink="metrics")
+    assert set(load_manifest(out)["sinks"]) == {"traces", "logs", "metrics"}
+
+    frame_cls = type(spark.range(1))
+    persists = []
+    real_persist = frame_cls.persist
+    monkeypatch.setattr(
+        frame_cls, "persist", lambda self, *a, **k: persists.append(1) or real_persist(self, *a, **k)
+    )
+    resumed = run_pipeline(spark, transcripts_path, out)
+    assert persists == [], "a single pending sink must not persist the routed frame"
     for sink in ("traces", "logs", "metrics", "sink_counts"):
-        assert manifest1["sinks"][sink]["content_hash"] == manifest2["sinks"][sink]["content_hash"], sink
+        assert resumed["sinks"][sink]["content_hash"] == manifest_full["sinks"][sink]["content_hash"], sink
+    assert resumed["resumed_partial"]["sinks_this_run"] == ["sink_counts"]
+    assert "turns_per_sec" not in resumed
 
 
-def test_onepass_partitioned_routing_matches_multiwrite(spark, transcripts_path, pipe_out, tmp_path):
-    """SCALE.md's one-pass layout: a single partitionBy(signal_type) write
-    + per-sink pruned views must yield exactly the multi-write pipeline's
-    per-sink rows and content hashes, and reading one sink must prune to
-    its partition (not scan the other signal types)."""
+def test_multiwrite_resume_over_onepass_layout_rewrites(spark, transcripts_path, pipe_out, tmp_path):
+    """Legacy-manifest guard: earlier versions could write a "onepass"
+    layout, one partitioned routed dataset whose manifest marks the same
+    sink names complete but which never wrote the per-sink directories.
+    Resuming run_pipeline over such a manifest, with a matching input
+    fingerprint, must rewrite every sink instead of returning it."""
     import os
 
-    from otel_kafka_pg_spark.operators.route import SINK_BUILDERS
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline_onepass
+    from otel_kafka_pg_spark.plans.manifest import save_manifest
 
-    out = str(tmp_path / "onepass")
-    manifest = run_pipeline_onepass(spark, transcripts_path, out)
-    _, multi = pipe_out  # the standard three-write run over the same input
-
-    for sink in ("traces", "logs", "metrics", "sink_counts"):
-        assert manifest["sinks"][sink]["rows"] == multi["sinks"][sink]["rows"], sink
-        assert manifest["sinks"][sink]["content_hash"] == multi["sinks"][sink]["content_hash"], sink
-
-    # partition pruning: the traces view's scan must carry a NON-EMPTY
-    # PartitionFilters on signal_type ('PartitionFilters: []' prints on
-    # every parquet scan, so presence of the label alone proves nothing)
-    import re
-
-    back = spark.read.parquet(os.path.join(out, "routed"))
-    plan = SINK_BUILDERS["traces"](back)._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "signal_type" in m.group(1) and "trace" in m.group(1), m.group(0) if m else plan[:500]
-
-
-def test_multiwrite_resume_over_onepass_layout_rewrites(spark, transcripts_path, tmp_path):
-    """Layout-mismatch resume symmetry (round-3 advice): a onepass manifest
-    marks the same sink names complete but never wrote the per-sink
-    directories — resuming run_pipeline over it must rewrite everything
-    (and vice versa, which run_pipeline_onepass already guards)."""
-    import os
-
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline_onepass
-
+    _, full = pipe_out
     out = str(tmp_path / "mixed")
-    run_pipeline_onepass(spark, transcripts_path, out)
+    legacy = {
+        "input_fingerprint": full["input_fingerprint"],
+        "layout": "onepass",
+        "sinks": {
+            sink: {
+                "status": "complete",
+                "rows": entry["rows"],
+                "content_hash": entry["content_hash"],
+                "path": os.path.join(out, "routed"),
+            }
+            for sink, entry in full["sinks"].items()
+        },
+    }
+    save_manifest(out, legacy)
     manifest = run_pipeline(spark, transcripts_path, out)  # must NOT no-op
     for sink in ("traces", "logs", "metrics", "sink_counts"):
         dest = os.path.join(out, sink)
         assert os.path.isdir(dest), f"{sink}: multiwrite resume over onepass wrote nothing"
         assert manifest["sinks"][sink]["rows"] == spark.read.parquet(dest).count()
+        assert manifest["sinks"][sink]["content_hash"] == full["sinks"][sink]["content_hash"], sink
     assert manifest.get("layout") != "onepass"
 
 
@@ -258,22 +262,6 @@ def test_input_fingerprint_normalizes_path_spelling(tmp_path, monkeypatch):
     assert input_fingerprint("in_norm") == absolute
 
 
-def test_onepass_written_superset_is_slim(spark, transcripts_path, tmp_path):
-    """The onepass routed write must carry only sink-consumed columns —
-    never the raw text, the resource_attrs map, or turn_seq (the heaviest
-    unconsumed columns; dropping them keeps the one write at the
-    three-sink form's volume), and it records the same throughput fields
-    as the multiwrite manifest."""
-    from otel_kafka_pg_spark.plans.pipeline import run_pipeline_onepass
-
-    out = str(tmp_path / "op_out")
-    m = run_pipeline_onepass(spark, transcripts_path, out)
-    written = spark.read.parquet(f"{out}/routed")
-    assert not {"text", "resource_attrs", "turn_seq"} & set(written.columns)
-    assert m.get("turns_per_sec") is not None
-    assert all(e.get("input_rows") for e in m["sinks"].values())
-
-
 def test_default_lookup_is_fingerprinted_for_resume(spark, transcripts_path, tmp_path):
     """Regression (r5 review): the DEFAULT enrich lookup must be folded into
     the resume fingerprint just like a caller-provided one — its content
@@ -307,3 +295,32 @@ def test_default_lookup_is_fingerprinted_for_resume(spark, transcripts_path, tmp
         redone["sinks"]["traces"]["content_hash"]
         != manifest["sinks"]["traces"]["content_hash"]
     )
+
+
+def test_job_entry_point_summary_matches_run_pipeline(spark, tmp_path, monkeypatch, capsys):
+    """jobs/pipeline.py main(), run in-process over the active session:
+    its printed summary carries a throughput and the same per-sink rows
+    as run_pipeline's manifest for the same input."""
+    import importlib.util
+    import json
+    import os
+
+    from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
+
+    src = load_or_synth_transcripts(6000, seed=42)
+    job_py = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs", "pipeline.py")
+    spec = importlib.util.spec_from_file_location("pipeline_job", job_py)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    monkeypatch.setattr("sys.argv", ["pipeline.py", "--input", src, "--output", str(tmp_path / "job")])
+    assert job.main() == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert summary["turns_per_sec"] and summary["turns_per_sec"] > 0
+    assert summary["resumed_partial"] is None
+    manifest = run_pipeline(spark, src, str(tmp_path / "lib"))
+    assert summary["sinks"] == {
+        sink: {"rows": e["rows"], "status": e["status"]} for sink, e in manifest["sinks"].items()
+    }
+    assert set(summary["sinks"]) == {"traces", "logs", "metrics", "sink_counts"}

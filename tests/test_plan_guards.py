@@ -107,21 +107,6 @@ def test_sink_plans_prune_the_ordering_window(spark):
     assert counts_plan.count("Exchange hashpartitioning") == 1
 
 
-def test_pipeline_salted_optin_adds_one_shuffle(spark):
-    """salt_buckets>0 (for skew-laid-out sources) adds exactly the salted
-    pre-parse exchange and nothing else."""
-    from otel_kafka_pg_spark.plans.pipeline import build_routed
-    from otel_kafka_pg_spark.sources.synth import load_or_synth_transcripts
-
-    routed = build_routed(
-        spark, spark.read.parquet(load_or_synth_transcripts(2000, seed=7)), salt_buckets=16
-    )
-    plan = _plan(routed)
-    assert plan.count("BroadcastHashJoin") == 1
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 2, f"salted plan = salted repartition + window:\n{plan}"
-
-
 def test_parse_stays_in_wholestage_codegen(spark):
     """Native parse must be inside a WholeStageCodegen span — no Python, no
     interpreted eval in the hot path."""
@@ -132,41 +117,6 @@ def test_parse_stays_in_wholestage_codegen(spark):
     plan = _plan(df)
     assert "*(" in plan  # codegen'd spans print as "*(<stage id>)"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_salted_repartition_spreads_hot_conversation(spark):
-    """Skew guard: a 4000-turn conversation must not land in one task.
-    Hashing bare conv_id would put all its turns in a single partition;
-    salting with pmod(hash(turn_idx), buckets) spreads it across ~buckets
-    partitions while small conversations stay cheap."""
-    import datetime as dt
-
-    from otel_kafka_pg_spark.operators.order import salted_repartition
-    from otel_kafka_pg_spark.schemas import TRANSCRIPTS
-
-    ts = dt.datetime(2025, 1, 1)
-    rows = [("hot", i, "user", "t", "bash", ts) for i in range(4000)]
-    rows += [(f"c{j}", i, "user", "t", "bash", ts) for j in range(20) for i in range(5)]
-    df = spark.createDataFrame(rows, TRANSCRIPTS)
-
-    unsalted = df.repartition(8, F.col("conv_id"))
-    hot_unsalted = (
-        unsalted.filter(F.col("conv_id") == "hot")
-        .groupBy(F.spark_partition_id())
-        .count()
-        .count()
-    )
-    assert hot_unsalted == 1  # the failure mode: one task owns the whole conv
-
-    salted = salted_repartition(df, 8, salt_buckets=16)
-    per_part = (
-        salted.filter(F.col("conv_id") == "hot")
-        .groupBy(F.spark_partition_id().alias("p"))
-        .count()
-        .collect()
-    )
-    assert len(per_part) >= 4  # spread across most of the 8 partitions
-    assert max(r["count"] for r in per_part) < 4000 * 0.5  # no partition owns half
 
 
 def test_sink_counts_single_shuffle(spark):
